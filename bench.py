@@ -64,57 +64,14 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
-    from pyspark.sql import SparkSession
+    from iot_real_time_data_pipeline_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        # Round-12 fix for the per-round "roaming inflation" class: a
-        # 228-query bench session generates more whole-stage-codegen
-        # classes than the JVM's default 240 MB code cache holds; once
-        # it fills, the JIT flushes hot methods / stops compiling and a
-        # position-dependent subset of line items runs interpreted at a
-        # SUSTAINED 2-10x (measured: docs_decontaminate 5.8-6.3 s
-        # across all three repeats vs its plan-identical 0.73 s r11
-        # reading, zero GC time — BENCH_DETAIL_r12_gc16.json). A
-        # deployment hits the same wall on long-lived executors:
-        # spark.executor.extraJavaOptions gets the same flag.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_GRAFT_DRIVER_JAVA_OPTS",
-                "-XX:ReservedCodeCacheSize=512m",
-            ),
-        )
-        # The 228-query session produces far more than 100 distinct
-        # whole-stage-codegen classes per pass, so the DEFAULT global
-        # codegen class cache (spark.sql.codegen.cache.maxEntries=100,
-        # static conf) evicts every query's classes long before its
-        # in-session repeats run: each repeat re-runs Janino AND starts
-        # HotSpot cold on a brand-new class identity. Which queries pay
-        # depends on eviction order — the leading suspect for the
-        # roaming per-round inflation (BENCH_DETAIL_r12_cc240.json
-        # rules OUT code-cache exhaustion: 142 MB peak vs 240 MB cap).
-        # Sized to hold every stage of the full suite; pairs with the
-        # bigger ReservedCodeCacheSize above.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "5000"),
-        )
-        # PySpark 4's per-API-call stack capture (error-context call
-        # sites) costs ~1 ms per DataFrame/Column call — material at
-        # this suite's expression density. Diagnostic only.
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
+    spark = build_session(
+        "bench",
+        master=f"local[{cpus}]",
+        extra_conf={
+            "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 

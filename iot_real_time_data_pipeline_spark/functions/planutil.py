@@ -61,6 +61,7 @@ lineage truncation, same lazy contract, HDFS-durable blocks.
 
 from __future__ import annotations
 
+import re
 import threading
 
 from pyspark.sql import DataFrame
@@ -74,6 +75,16 @@ BROADCAST_KEY = "spark.sql.autoBroadcastJoinThreshold"
 RELIABLE_KEY = "spark.sql.graft.checkpoint.reliable"
 
 _FLIP_LOCK = threading.Lock()
+
+# A broadcast hint in an optimized logical plan's tree string: a
+# ``ResolvedHint`` node, or a Join whose line ends in its hint info
+# (``..., rightHint=(strategy=broadcast)``). Anchored to the tree
+# syntax so a string literal carrying the same words does not match.
+_BROADCAST_HINT = re.compile(
+    r"^[ :+\-]*(?:ResolvedHint |Join .*, (?:left|right)Hint=\(strategy=broadcast\)"
+    r"(?:, rightHint=\([^()]*\))?$)",
+    re.MULTILINE,
+)
 
 
 def inline_rows(spark, rows, cols) -> DataFrame:
@@ -92,7 +103,12 @@ def inline_rows(spark, rows, cols) -> DataFrame:
     ``cols`` is ``[(name, sql_type), ...]``; values pass through
     ``F.lit(v).cast(sql_type)``, so ints/floats/strings/None keep
     exactly the types the old ``createDataFrame(rows, schema)`` gave.
+    An empty ``rows`` gives an empty frame of the same schema.
     """
+    if not rows:
+        return spark.range(0).select(
+            *[F.lit(None).cast(t).alias(n) for n, t in cols]
+        )
     structs = [
         F.struct(
             *[
@@ -142,7 +158,7 @@ def lazy_local_checkpoint(df: DataFrame, reliable: bool | None = None) -> DataFr
             # them false-positives every operator that reads a persisted
             # frame (found immediately by the r13 baseline bench run).
             plan = df._jdf.queryExecution().optimizedPlan().toString()
-            if "strategy=broadcast" in plan or "ResolvedHint" in plan:
+            if _BROADCAST_HINT.search(plan):
                 raise RuntimeError(
                     "lazy_local_checkpoint: subtree carries an explicit "
                     "broadcast hint, which disabled auto-broadcast cannot "

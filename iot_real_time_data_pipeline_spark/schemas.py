@@ -163,24 +163,6 @@ def raw_event_schema() -> T.StructType:
     )
 
 
-def validated_event_fields() -> list[T.StructField]:
-    """Columns appended by validation/alerting (lamda.py:437-471)."""
-    alert_struct = T.StructType(
-        [
-            T.StructField("type", T.StringType()),
-            T.StructField("priority", T.StringType()),
-            T.StructField("description", T.StringType()),
-        ]
-    )
-    return [
-        T.StructField("validation_status", T.StringType()),
-        T.StructField("validation_errors", T.ArrayType(T.StringType())),
-        T.StructField("validation_warnings", T.ArrayType(T.StringType())),
-        T.StructField("validation_timestamp", T.TimestampType()),
-        T.StructField("alerts", T.ArrayType(alert_struct)),
-    ]
-
-
 # ---------------------------------------------------------------------------
 # Staging ("valid_readings") schema — the SQL contract
 # (Transforming Tables.sql:59-102; FIXTURES.md §2)
@@ -227,58 +209,3 @@ DIM_WEATHER_KEY_COLS = [
     "surface_pressure",
 ]
 DIM_LOCATION_KEY_COLS = ["loc_id", "latitude", "longitude"]
-
-
-def dim_soil_schema() -> T.StructType:
-    return T.StructType(
-        [T.StructField("soil_key", T.LongType())]
-        + [T.StructField(c, T.DoubleType()) for c in DIM_SOIL_KEY_COLS]
-    )
-
-
-def dim_time_schema() -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("full_date", T.TimestampType()),
-            T.StructField("year", T.IntegerType()),
-            T.StructField("month", T.IntegerType()),
-            T.StructField("day", T.IntegerType()),
-            T.StructField("hour", T.IntegerType()),
-            T.StructField("minute", T.IntegerType()),
-        ]
-    )
-
-
-def dim_location_schema() -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("location_key", T.LongType()),
-            T.StructField("loc_id", T.StringType()),
-            T.StructField("latitude", T.DoubleType()),
-            T.StructField("longitude", T.DoubleType()),
-        ]
-    )
-
-
-def dim_weather_schema() -> T.StructType:
-    return T.StructType(
-        [T.StructField("weather_key", T.LongType())]
-        + [T.StructField(c, T.DoubleType()) for c in DIM_WEATHER_KEY_COLS]
-    )
-
-
-def fact_schema() -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("fact_id", T.LongType()),
-            T.StructField("evt_id", T.StringType()),
-            T.StructField("location_key", T.LongType()),
-            T.StructField("weather_key", T.LongType()),
-            T.StructField("soil_key", T.LongType()),
-            T.StructField("full_date", T.TimestampType()),
-            T.StructField("soil_temperature", T.DoubleType()),
-            T.StructField("soil_humidity", T.DoubleType()),
-            T.StructField("water_level", T.DoubleType()),
-            T.StructField("validation_status", T.StringType()),
-        ]
-    )

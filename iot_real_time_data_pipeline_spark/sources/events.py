@@ -120,27 +120,3 @@ def parse_kafka_records(records: DataFrame) -> DataFrame:
     )
     return parse_raw_payloads(with_seq, "value", seq_col="_kafka_seq")
 
-
-def read_raw_events_kafka(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "latest",
-) -> DataFrame:
-    """S1/S2 production form: ``format("kafka")`` -> the shared parse
-    path (lamda.py:422-428's Kinesis consumer, re-expressed).
-
-    Requires the spark-sql-kafka connector on the classpath. This
-    sandbox ships neither a broker nor the connector jar, so the
-    ``.load()`` itself is untestable here; everything above it —
-    ``parse_kafka_records`` and the whole downstream pipeline — is the
-    unit-tested shared code path.
-    """
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .load()
-    )
-    return parse_kafka_records(raw)

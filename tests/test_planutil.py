@@ -64,6 +64,39 @@ def test_lazy_local_checkpoint_rejects_explicit_broadcast_hint(spark):
     assert spark.conf.get(PU.AQE_KEY) == "true"
 
 
+def test_lazy_local_checkpoint_ignores_hint_words_in_string_literals(spark):
+    """The guard matches hint syntax, not raw text: a filter on a string
+    literal spelling ``ResolvedHint`` / ``strategy=broadcast`` has no
+    hint and must convert; a real broadcast() hint next to it still
+    must raise."""
+    words = "x ResolvedHint (strategy=broadcast)"
+    a = spark.range(100).select(
+        F.concat(F.lit("k"), F.col("id").cast("string")).alias("k")
+    )
+    b = spark.range(10).select(
+        F.concat(F.lit("k"), F.col("id").cast("string")).alias("k")
+    )
+    df = a.filter(F.col("k") != words).join(b.filter(F.col("k") != words), "k")
+    # the literal survives into the optimized plan the guard scans
+    assert "ResolvedHint" in df._jdf.queryExecution().optimizedPlan().toString()
+    assert PU.lazy_local_checkpoint(df).count() == 10
+    with pytest.raises(RuntimeError, match="broadcast hint"):
+        PU.lazy_local_checkpoint(
+            a.filter(F.col("k") != words).join(F.broadcast(b), "k")
+        )
+
+
+def test_inline_rows_empty_is_typed_empty_frame(spark):
+    """``inline_rows`` with no rows must still analyze (an empty literal
+    array is array<void>) and carry the requested column types."""
+    cols = [("a", "bigint"), ("b", "string"), ("c", "double")]
+    df = PU.inline_rows(spark, [], cols)
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema] == cols
+    assert df.collect() == []
+    full = PU.inline_rows(spark, [(1, "x", 2.5)], cols)
+    assert [f.dataType for f in full.schema] == [f.dataType for f in df.schema]
+
+
 def test_lazy_local_checkpoint_tolerates_persisted_broadcast_subtree(spark):
     """A persisted subtree whose CACHED physical plan embeds a
     BroadcastExchange (planned earlier under normal confs) must NOT
