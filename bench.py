@@ -1,7 +1,9 @@
 """Headline benchmark: end-to-end pipeline + analytics + LLM operators.
 
-Runs at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+Runs at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) in a
+``session.build_session`` session (``local[$SPARK_GRAFT_CPUS]``, default
+every core; driver heap ``$SPARK_DRIVER_MEMORY``, default 8g) and prints
+ONE JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {...per-query sec...}, "sf": <sf>}
@@ -61,19 +63,13 @@ def _current_round_tag() -> str:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
     from iot_real_time_data_pipeline_spark.session import build_session
 
-    spark = build_session(
-        "bench",
-        master=f"local[{cpus}]",
-        extra_conf={
-            "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "16g")
-        },
-    )
+    spark = build_session("bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     from iot_real_time_data_pipeline_spark import llm_queries as LQ
     from iot_real_time_data_pipeline_spark.entrypoints import iot_staging

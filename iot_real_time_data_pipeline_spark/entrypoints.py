@@ -127,8 +127,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     A caller of the query registry may own the SparkSession, so
     ``session.py``'s confs may not be present; ``apply_engine_confs``
-    sets them (among them ``nanosAsLong``: the input ``events.parquet``
-    stores ``ts`` as TIMESTAMP(NANOS), which Spark 4 rejects by default).
+    fills in the ones the caller has not set (among them ``nanosAsLong``:
+    the input ``events.parquet`` stores ``ts`` as TIMESTAMP(NANOS), which
+    Spark 4 rejects by default).
     Columns read as long-nanos are converted back by the caller (see
     ``iot_raw_events``).
     """

@@ -1,20 +1,25 @@
 """The one SparkSession factory: every engine Spark setting lives here.
 
-Local testing runs on ``local[N]`` (single JVM), but every setting below
-is chosen for the 1000-executor / 100 TB target:
+The settings below are chosen with the 1000-executor / 100 TB target in
+mind, but they are measured only on ``local[N]`` masters (one JVM):
 
 - AQE on: runtime partition coalescing, skew-join splitting, and
   dynamic broadcast conversion replace hand-tuned shuffle counts.
 - Arrow on: the few Pandas-UDF operators (stateful throttle, multimodal
   decode) move data in columnar batches, not pickled rows.
-- ``spark.sql.shuffle.partitions`` is the session's core count
+- On a local master ``spark.sql.shuffle.partitions`` is the core count
   (``defaultParallelism``): one initial shuffle task per core, which AQE
-  coalesces down further. It is derived, never keyed to input size.
+  coalesces down further. On a cluster master the rule is not applied:
+  there ``defaultParallelism`` at session start counts only the
+  executors registered so far (it can be 2), AQE cannot split
+  non-skewed partitions, and stateful streaming operators freeze the
+  count into their checkpoint. A cluster run sets the count itself
+  (``extra_conf`` or ``--conf``); no cluster value has been measured.
 
 Two lists split the settings by when Spark accepts them. ``STATIC_CONFS``
 only take effect when the JVM / SparkContext starts, so only
 ``build_session`` can apply them. ``RUNTIME_CONFS`` are SQL confs that
-``apply_engine_confs`` sets on any live session; ``entrypoints.read_table``
+``apply_engine_confs`` fills into any live session; ``entrypoints.read_table``
 calls it because a caller of ``__spark_entry__`` may hand in a plain
 session of its own.
 """
@@ -84,10 +89,19 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+SHUFFLE_KEY = "spark.sql.shuffle.partitions"
+
+
 def apply_engine_confs(spark: SparkSession) -> None:
-    """Set every ``RUNTIME_CONFS`` entry on ``spark`` (idempotent)."""
+    """Set each ``RUNTIME_CONFS`` entry that ``spark`` has not set itself.
+
+    A value the session's owner chose wins: a session that turned
+    broadcast joins or AQE off for memory safety keeps them off.
+    Idempotent.
+    """
     for key, value in RUNTIME_CONFS.items():
-        spark.conf.set(key, value)
+        if spark.conf.get(key, None) is None:
+            spark.conf.set(key, value)
 
 
 def build_session(
@@ -111,7 +125,7 @@ def build_session(
     for key, value in conf.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
-    )
+    sc = spark.sparkContext
+    if sc.master.startswith("local"):
+        spark.conf.set(SHUFFLE_KEY, str(sc.defaultParallelism))
     return spark

@@ -32,17 +32,10 @@ def main() -> None:
         print("usage: profile_query.py QUERY [QUERY...]", file=sys.stderr)
         sys.exit(2)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     from iot_real_time_data_pipeline_spark.session import build_session
 
-    spark = build_session(
-        "profile",
-        master=f"local[{cpus}]",
-        extra_conf={
-            "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "16g")
-        },
-    )
+    spark = build_session("profile")
     spark.sparkContext.setLogLevel("ERROR")
 
     from iot_real_time_data_pipeline_spark import llm_queries as LQ

@@ -25,6 +25,10 @@ Usage::
     # e.g. python tools/scale_study.py BENCH_DETAIL_r10_sf1.json \\
     #   /root/testdata/sf0.1 /root/repo/.scaledata/sf0.1g \\
     #   /root/repo/.scaledata/sf0.3 /root/repo/.scaledata/sf1.0
+
+Cores and driver heap come from ``session.build_session``
+(``SPARK_GRAFT_CPUS``, default every core; ``SPARK_DRIVER_MEMORY``,
+default 8g). The sf1 runs above used ``SPARK_DRIVER_MEMORY=24g``.
 """
 
 from __future__ import annotations
@@ -85,15 +89,9 @@ def main() -> int:
     )
     from iot_real_time_data_pipeline_spark.session import build_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = build_session(
-        "scale-study",
-        master=f"local[{cpus}]",
-        extra_conf={
-            "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "24g")
-        },
-    )
+    spark = build_session("scale-study")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     qs = E.queries()
     # JIT/janino warmup so the first measured query isn't charged for
