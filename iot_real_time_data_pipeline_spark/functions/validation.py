@@ -148,11 +148,7 @@ def _any(flags: list[Column]) -> Column:
     return out
 
 
-def validate_flags(
-    df: DataFrame,
-    raw_json_col: str | None = None,
-    error_class_cols: bool = False,
-) -> DataFrame:
+def validate_flags(df: DataFrame, raw_json_col: str | None = None) -> DataFrame:
     """Rule evaluation WITHOUT the string-array assembly.
 
     Appends ``validation_status`` / ``dead_letter`` / ``sensor_<name>``
@@ -171,11 +167,9 @@ def validate_flags(
     scan→flags→arrays→sink plan exceeds janino's 64 KB method limit
     and would silently fall back to interpreted evaluation).
 
-    With ``error_class_cols=True``, three ``_errcls_*`` booleans (did
-    any sensor fire extreme / missing / out-of-range) are added for the
-    alert engine's R1 class checks (lamda.py:163-182), replacing an
-    interpreted ``exists()`` scan over the error array; the caller is
-    expected to drop them (``with_alerts`` does).
+    Three ``_errcls_*`` booleans (did any sensor fire extreme / missing
+    / out-of-range) feed the alert engine's R1 class checks
+    (lamda.py:163-182); ``with_alerts`` consumes and drops them.
     """
     raw_json = F.col(raw_json_col) if raw_json_col else None
     loc = F.col("loc_id")
@@ -290,14 +284,13 @@ def validate_flags(
             .otherwise(F.lit("VALID"))
         ),
     }
-    if error_class_cols:
-        # R1's `exists(errors, e -> startswith('sensor_data') & contains(cls))`
-        # as plain booleans. "missing" never matches: per-sensor missing
-        # classifies as extreme_value (None is a sentinel, lamda.py:97),
-        # and no other sensor_data:* error string contains "missing".
-        l4["_errcls_extreme"] = eligible & _any([F.col(f"_ext_{s}") for s in SENSOR_NAMES])
-        l4["_errcls_missing"] = F.lit(False)
-        l4["_errcls_oor"] = eligible & _any([F.col(f"_oor_{s}") for s in SENSOR_NAMES])
+    # R1's "some sensor_data:* error names this class" as plain
+    # booleans. "missing" never matches: per-sensor missing classifies
+    # as extreme_value (None is a sentinel, lamda.py:97), and no other
+    # sensor_data:* error string contains "missing".
+    l4["_errcls_extreme"] = eligible & _any([F.col(f"_ext_{s}") for s in SENSOR_NAMES])
+    l4["_errcls_missing"] = F.lit(False)
+    l4["_errcls_oor"] = eligible & _any([F.col(f"_oor_{s}") for s in SENSOR_NAMES])
     for s in SENSOR_NAMES:
         # Validated double — null for sentinel / unconvertible values.
         l4[f"sensor_{s}"] = F.when(
@@ -319,8 +312,9 @@ def validate_flags(
 
 def attach_validation_arrays(df: DataFrame) -> DataFrame:
     """Fold the ``_*`` rule flags into the ``validation_errors`` /
-    ``validation_warnings`` string arrays, then drop the flags
-    (``_errcls_*`` excepted — ``with_alerts`` owns those).
+    ``validation_warnings`` string arrays, then drop the flags. Runs
+    on ``with_alerts``'s output, which has already consumed the
+    ``_errcls_*`` flags.
 
     Pure function of ``validate_flags``'s output; membership and order
     match the reference's append order exactly (lamda.py:60-150). The
@@ -375,27 +369,4 @@ def attach_validation_arrays(df: DataFrame) -> DataFrame:
         )
     )
     df = df.withColumns({"validation_errors": errors, "validation_warnings": warnings})
-    keep = {"_errcls_extreme", "_errcls_missing", "_errcls_oor"}
-    return df.drop(*[c for c in df.columns if c.startswith("_") and c not in keep])
-
-
-def validate_events(
-    df: DataFrame,
-    raw_json_col: str | None = None,
-    error_class_cols: bool = False,
-) -> DataFrame:
-    """Append validation outcome columns to a raw-event DataFrame.
-
-    Adds ``validation_status`` / ``validation_errors`` /
-    ``validation_warnings`` / ``dead_letter`` plus one ``sensor_<name>``
-    double column per sensor (the validated-cast value — the
-    reference's in-place conversion, lamda.py:109-117).
-
-    One-shot composition of ``validate_flags`` +
-    ``attach_validation_arrays``; long-lived deployments that want the
-    cache boundary between the two phases call them separately (see
-    ``entrypoints.iot_processed``).
-    """
-    return attach_validation_arrays(
-        validate_flags(df, raw_json_col=raw_json_col, error_class_cols=error_class_cols)
-    )
+    return df.drop(*[c for c in df.columns if c.startswith("_")])

@@ -48,7 +48,7 @@ def process_events(
     ``attach_validation_arrays(with_alerts(flagged))``.
     """
     clock = clock if clock is not None else F.current_timestamp()
-    flagged = validate_flags(parsed, raw_json_col=RAW_JSON_COL, error_class_cols=True)
+    flagged = validate_flags(parsed, raw_json_col=RAW_JSON_COL)
     flagged = flagged.withColumn("validation_timestamp", clock)
     flagged = flagged.withColumn("event_ts", event_time(F.col("timestamp")))
     if not assemble:

@@ -244,7 +244,6 @@ def incremental_load(
     staging_batch: DataFrame,
     existing: dict[str, DataFrame] | None = None,
     dense_keys: bool = False,
-    cache_handle_out: list[DataFrame] | None = None,
     use_watermark: bool = True,
 ) -> dict[str, DataFrame]:
     """One incremental load cycle (SURVEY §3.3), batch or foreachBatch.
@@ -267,11 +266,11 @@ def incremental_load(
     under out-of-order file arrival). The epoch-filter's incidental
     NULL-timestamp rejection is kept explicitly.
 
-    The filtered batch is persisted (it feeds 4 dim builds + the fact
-    join). Long-running callers (foreachBatch loops) should pass
-    ``cache_handle_out`` and ``unpersist()`` the appended handle after
-    materializing the outputs, or cached blocks accumulate in executor
-    storage; one-shot callers can rely on LRU eviction.
+    The batch feeds four dim builds and the fact join, so each of them
+    re-reads ``staging_batch``: callers pass a staging frame built on a
+    cached frame (the streaming loader's persisted lake, the driver's
+    persisted flag frame), which keeps those re-reads cheap without a
+    second cache here.
     """
     existing = existing or {}
     if use_watermark:
@@ -280,11 +279,6 @@ def incremental_load(
         )
     else:
         new_data = staging_batch.filter(F.col("timestamp").isNotNull())
-    # Reused 4x (dims) + 1x (fact) — cache instead of recomputing the
-    # scan+filter five times (the reference recomputes, SURVEY §4).
-    new_data = new_data.persist()
-    if cache_handle_out is not None:
-        cache_handle_out.append(new_data)
 
     loc_new = new_dim_location(new_data, existing.get("dim_location"), dense_keys)
     time_new = new_dim_time(new_data, existing.get("dim_time"))

@@ -767,10 +767,11 @@ def bpe_train(
     one groupBy over raw text happens once. Per round: one explode +
     partial-agged pair count, a 1-ROW driver read (the argmax — the
     same sanctioned scalar collect as the watermark), and a narrow
-    map (array fold) applying the merge; ``localCheckpoint`` caps the
-    iterated lineage. Ties break (freq DESC, a, b) so the merge
-    sequence is deterministic — which makes the whole LOOP
-    oracle-checkable: the DuckDB twin unrolls every round.
+    map (array fold) applying the merge; each round reads the previous
+    round's cached symbol table, and one such cache is held at a time.
+    Ties break (freq DESC, a, b) so the merge sequence is deterministic
+    — which makes the whole LOOP oracle-checkable: the DuckDB twin
+    unrolls every round.
 
     ``batch_k > 1`` opts into the standard trainer optimization: per
     round, the top-k NON-OVERLAPPING pairs (no shared symbols — so each
@@ -850,9 +851,13 @@ def _bpe_train_state(
     # baked-RDD variant ran 32-task rounds where AQE runs 1-2 tasks).
     # Plan growth stays LINEAR (not labelprop's 2^rounds): each round
     # references the previous frame exactly once, so the r12 nested-
-    # plan pathology cannot arise here, and the CacheManager dedupes
-    # the identical plans across in-session repeats.
+    # plan pathology cannot arise here. Once a round's collect has
+    # materialized ``cur`` from the previous round's cache, that
+    # previous frame is unpersisted, so the loop holds one round's cache
+    # at a time instead of one per merge. The returned frame reads the
+    # last materialized round, whose cache stays for it.
     cur = vocab.persist()
+    prev = None
     merges: list[tuple[int, str, str, int]] = []
     init = F.expr("cast(array() as array<string>)")
 
@@ -896,6 +901,8 @@ def _bpe_train_state(
             .limit(max(k * 4, k))
             .collect()
         )
+        if prev is not None:
+            prev.unpersist()
         if not top:
             break
         batch: list[tuple[str, str, int]] = []
@@ -912,7 +919,7 @@ def _bpe_train_state(
         for a, b, freq in batch:
             col = F.aggregate(col, init, make_step(a, b, a + b))
             merges.append((len(merges), a, b, freq))
-        cur = cur.withColumn("syms", col).persist()
+        prev, cur = cur, cur.withColumn("syms", col).persist()
     return merges, cur
 
 

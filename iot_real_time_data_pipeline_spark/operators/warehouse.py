@@ -32,6 +32,17 @@ either read path (TIMESTAMP_NTZ under the UTC session, or long nanos if
 a file stores TIMESTAMP(NANOS)); DuckDB mirrors with
 ``epoch_ns(col) // 1e9`` — both floor on the positive range, and the
 values are midnight-aligned anyway.
+
+Cache contract: a few operators persist their own intermediate frames
+because several branches of one plan read them, and they never
+unpersist them, since the returned frame is lazy and still reads those
+caches. They are :func:`bloom_prejoin_audit` (keys, bits, fact keys),
+:func:`join_size_audit` (both key-count frames), :func:`market_basket`,
+``dedup.weighted_jaccard_pairs``, ``dedup.dup_graph_stats`` and
+``events_analytics.audience_overlap``. The caller must clear them: a
+long-lived session calls ``dedup.release_session_caches(spark)`` once it
+has consumed the results, or cached blocks pile up until storage
+eviction. The bench does this at every query-family boundary.
 """
 
 from __future__ import annotations

@@ -89,11 +89,6 @@ def parse_base64_payloads(df: DataFrame, payload_col: str = "data") -> DataFrame
     return parse_raw_payloads(decoded, "_payload")
 
 
-def read_raw_events_jsonl(spark: SparkSession, path: str) -> DataFrame:
-    """Batch read of the line-delimited raw stream mirror (S4)."""
-    return parse_raw_payloads(spark.read.text(path), "value")
-
-
 def read_raw_events_stream(spark: SparkSession, path: str, max_files_per_trigger: int | None = None) -> DataFrame:
     """Streaming read of the same wire format (S1/S2 stand-in)."""
     reader = spark.readStream.format("text")

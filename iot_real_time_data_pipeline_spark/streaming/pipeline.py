@@ -1,6 +1,6 @@
 """End-to-end Structured Streaming wrap (SURVEY §3.2 as one query).
 
-``run_stream`` composes: file/Kafka-shaped source -> parse ->
+``run_stream`` composes: line-delimited JSON file source -> parse ->
 validate/alert (the SAME batch expression builders — one code path,
 which the reference lacks) -> per-micro-batch:
 
@@ -17,9 +17,11 @@ which the reference lacks) -> per-micro-batch:
 - throttled alert sink (S7) — appended to an alerts table;
 - incremental star-schema load (S10/T4) appending dims + fact.
 
-Checkpointing gives exactly-once micro-batch replay; the watermark
-filter inside ``incremental_load`` additionally guards against
-reprocessing on restart (same belt-and-braces the reference runs).
+Exactly-once comes from two guards: the checkpoint replays an
+uncommitted micro-batch, and the ``evt_id`` anti-join against the
+loaded fact table drops events a replay (or a re-sent file) delivers
+again. The loader passes ``use_watermark=False`` to
+``incremental_load``, so the Glue watermark plays no part here.
 
 Scale notes: every per-batch step is a narrow map or a key-bounded
 join; the lake write shuffles only to coalesce output files. State on
@@ -92,13 +94,20 @@ def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
         try:
             routed = route(processed)
 
+            # Star history, read once per batch: the evt_id anti-join
+            # below and the incremental load both use these frames.
+            existing = {
+                name: df
+                for name in ["dim_location", "dim_time", "dim_soil",
+                             "dim_weather", "fact_sensor_readings"]
+                if (df := _read_or_none(spark, f"{warehouse_dir}/star/{name}")) is not None
+            }
             # T5 — idempotency: batch-internal dedup, then anti-join
             # against facts already loaded (replayed batches drop out).
             lake = routed["lake"].dropDuplicates(["event_id"])
-            existing_fact = _read_or_none(spark, f"{warehouse_dir}/star/fact_sensor_readings")
-            if existing_fact is not None:
+            if "fact_sensor_readings" in existing:
                 lake = lake.join(
-                    existing_fact.select(F.col("evt_id").alias("event_id")),
+                    existing["fact_sensor_readings"].select(F.col("evt_id").alias("event_id")),
                     on="event_id",
                     how="left_anti",
                 )
@@ -157,26 +166,15 @@ def foreach_batch_loader(warehouse_dir: str, jsonl_mirror: bool = False):
             # S10/T4 — star-schema incremental append.
             from ..operators.pipeline import to_staging
 
-            staging = to_staging(lake)
-            existing = {
-                name: df
-                for name in ["dim_location", "dim_time", "dim_soil",
-                             "dim_weather", "fact_sensor_readings"]
-                if (df := _read_or_none(spark, f"{warehouse_dir}/star/{name}")) is not None
-            }
-            handles: list[DataFrame] = []
             # use_watermark=False: this batch is already exactly the
             # new deliveries and the evt_id anti-join above guarantees
             # exactly-once; the T4 watermark would silently drop late /
             # out-of-order arrivals (see incremental_load's docstring).
             new_tables = incremental_load(
-                staging, existing=existing or None, dense_keys=False,
-                cache_handle_out=handles, use_watermark=False,
+                to_staging(lake), existing=existing, dense_keys=False, use_watermark=False,
             )
             for name, df in new_tables.items():
                 _append_parquet(df, f"{warehouse_dir}/star/{name}")
-            for h in handles:
-                h.unpersist()
             lake.unpersist()
         finally:
             flagged.unpersist()

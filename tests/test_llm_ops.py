@@ -2293,6 +2293,26 @@ def test_bpe_train_batched_skips_overlapping_pairs_in_round(spark):
     assert seq == bat
 
 
+def test_bpe_train_holds_one_round_cache_whatever_the_merge_count(spark):
+    """Each merge round persists its symbol table; the trainer releases
+    the previous round's once the next has materialized, so the cached
+    RDDs left behind do not grow with ``n_merges``."""
+    text = "low low low low low lower lower newest newest newest widest widest widest"
+    docs = spark.createDataFrame([(1, text, "en")],
+                                 "doc_id long, text string, lang string")
+    def persisted_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    cached = {}
+    for n in (2, 6):
+        spark.catalog.clearCache()
+        before = persisted_ids()
+        assert len(TA.bpe_train(docs, n_merges=n).collect()) == n
+        cached[n] = len(persisted_ids() - before)
+    spark.catalog.clearCache()
+    assert cached[6] == cached[2] == 1, cached
+
+
 def test_profile_table_counts_nulls_and_distincts(spark):
     rows = [
         (1, "aa", "en", "web", 2),
